@@ -61,9 +61,12 @@ def _generate_resources(spark, cfg):
         dd_codesystems,
         dd_observation_definitions,
         dd_valuesets,
+        harmony_conceptmap,
+        harmony_valuesets,
         observations_with_components,
         questionnaire_responses,
         questionnaires,
+        resources_frame,
         resources_to_json,
     )
 
@@ -92,19 +95,17 @@ def _generate_resources(spark, cfg):
                 questionnaire_responses(df, dd, cfg, name, subject, keys)
             )
         )
-    if ds.dds:
-        # the full DD resource set the reference's play pipeline emits
-        for gen in (dd_codesystems, dd_valuesets, dd_observation_definitions,
-                    dd_activity_definitions, questionnaires):
-            frames.append(resources_to_json(gen(spark, ds.dds, cfg)))
+    # the full DD resource set the reference's play pipeline emits, plus
+    # the harmony ConceptMap/ValueSets: driver-built, one frame
+    driver_built: list[dict] = []
+    for gen in (dd_codesystems, dd_valuesets, dd_observation_definitions,
+                dd_activity_definitions, questionnaires):
+        driver_built += gen(ds.dds, cfg)
     if ds.concept_map is not None:
-        from ncpi_whistler_spark.plans.resources import (
-            harmony_conceptmap,
-            harmony_valuesets,
-        )
-
-        frames.append(resources_to_json(harmony_conceptmap(spark, ds.concept_map, cfg)))
-        frames.append(resources_to_json(harmony_valuesets(spark, ds.concept_map, cfg)))
+        driver_built += harmony_conceptmap(ds.concept_map, cfg)
+        driver_built += harmony_valuesets(ds.concept_map, cfg)
+    if driver_built:
+        frames.append(resources_frame(spark, driver_built))
     # user-authored projectors (whistle_src/projector_lib analog,
     # wstlr/play.py:46-76): study-registered Python builders merge their
     # frames into the same resource union the whistle output would
@@ -306,7 +307,7 @@ def cmd_buildcm(args) -> int:
     from ncpi_whistler_spark.plans.resources import (
         harmony_conceptmap,
         harmony_valuesets,
-        resources_to_json,
+        resource_body,
     )
     from ncpi_whistler_spark.sources.harmony import ConceptMap
 
@@ -318,9 +319,8 @@ def cmd_buildcm(args) -> int:
         return 1
     cm = ConceptMap.from_csv(spark, harmony, curies=cfg.curies)
     doc: dict[str, list] = {}
-    for frame in (harmony_conceptmap(spark, cm, cfg), harmony_valuesets(spark, cm, cfg)):
-        for r in resources_to_json(frame).collect():
-            doc.setdefault(r["module"], []).append(json.loads(r["resource_json"]))
+    for r in harmony_conceptmap(cm, cfg) + harmony_valuesets(cm, cfg):
+        doc.setdefault(r["module"], []).append(resource_body(r))
     with open(args.out, "w") as fh:
         json.dump(doc, fh, indent=2)
     n = sum(len(v) for v in doc.values())

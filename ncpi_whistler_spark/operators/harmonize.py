@@ -102,54 +102,3 @@ def add_display_columns(
         # reference omits the key entirely on miss; NULL + null-dropping
         # serialization reproduces that (SURVEY §7 risk 4)
     return out
-
-
-def add_display_columns_scoped(
-    df: DataFrame,
-    columns: list[str],
-    concept_map: ConceptMap,
-    suffix: str = "_display",
-) -> DataFrame:
-    """Stricter variant: display scoped per (column == local_system) via
-    broadcast joins — avoids cross-column code collisions the reference's
-    global map allows. Not reference-exact; offered as the safer option.
-    """
-    disp = concept_map.display_map_df()
-    out = df
-    for c in columns:
-        lkp = F.broadcast(
-            disp.where(F.col("local_system") == c).select(
-                F.col("local_code").alias(f"__d_{c}"),
-                F.col("display").alias(c + suffix),
-            )
-        )
-        out = out.join(
-            lkp, on=F.col(c).cast("string") == F.col(f"__d_{c}"), how="left"
-        ).drop(f"__d_{c}")
-    return out
-
-
-def harmonize_map_expr(
-    concept_map: ConceptMap, local_system: str
-) -> tuple[Column, Column]:
-    """Alternative zero-join form for very small maps: returns
-    (map_expr, keys) where map_expr is a ``create_map`` literal usable as
-    ``element_at(map, col)``. Driver-collects the map — only for
-    config-sized dictionaries (the reference's are always config-sized)."""
-    table = concept_map.codings_lookup(local_system)
-    if table is None:
-        raise ValueError("concept map too large for a literal map expression")
-    pairs: list[Column] = []
-    for lc, codings in table.items():
-        arr = F.array(
-            *[
-                F.struct(
-                    F.lit(c).alias("code"),
-                    F.lit(d).alias("display"),
-                    F.lit(s).alias("system"),
-                )
-                for c, d, s in codings
-            ]
-        )
-        pairs.extend([F.lit(lc), arr])
-    return F.create_map(*pairs), F.lit(list(table))

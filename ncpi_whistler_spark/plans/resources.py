@@ -3,16 +3,21 @@
 The reference generates per-study Whistle code from the DD via Jinja
 templates (wstlr/sourcedata/obscomp.py, questionnaire.py, wstlr/wlib/dd/*)
 and runs it in a subprocess. Here the same schema drives *select-list
-generation*: each builder returns a typed struct DataFrame — one row per
-resource, partitionable by ``module``/``resourceType`` — produced in the
-same Spark job as extraction (no JSON round trip, no subprocess).
+generation* for the per-row resources (Observation, QuestionnaireResponse):
+a typed struct DataFrame produced in the same Spark job as extraction and
+serialized by ``resources_to_json``. The DD and harmony resources are
+config-scale: plain dicts built on the driver, as the reference renders
+them from one JSON document (wstlr/conceptmap.py:380-550), serialized
+together into one frame by ``resources_frame``.
 
-Nested optional fields stay NULL; ``resources_to_json`` drops nulls on
-serialization to match whistle's field-absent-when-nil output
-(SURVEY.md §7 risk 4).
+Both serializers drop null fields to match whistle's
+field-absent-when-nil output (SURVEY.md §7 risk 4).
 """
 
 from __future__ import annotations
+
+import json
+import re
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -234,12 +239,10 @@ def _study_meta_dict(study: StudyConfig, profile: str | None = None) -> dict:
     return meta
 
 
-def dd_codesystems(spark, dds: dict[str, DataDictionary], study: StudyConfig) -> DataFrame:
+def dd_codesystems(dds: dict[str, DataDictionary], study: StudyConfig) -> list[dict]:
     """G3: CodeSystem per table + per enumerated variable
     (wlib_dd_terms_codesystem.wstl:30-79), tagged with StudyMeta like the
-    reference (wlib_dd_terms_codesystem.wstl:35 + _study_meta.wstl:5-9).
-    DDs are plan metadata — createDataFrame of driver-built rows (they
-    are inherently tiny)."""
+    reference (wlib_dd_terms_codesystem.wstl:35 + _study_meta.wstl:5-9)."""
     rows = []
     prefix = study.dd_prefix or study.identifier_prefix
     meta = _study_meta_dict(study)
@@ -278,18 +281,12 @@ def dd_codesystems(spark, dds: dict[str, DataDictionary], study: StudyConfig) ->
                     ],
                 }
             )
-    schema = (
-        "module string, resourceType string, "
-        "meta struct<tag:array<struct<system:string,code:string>>,profile:array<string>>, "
-        "url string, name string, "
-        "title string, status string, concept array<struct<code:string,display:string>>"
-    )
-    return spark.createDataFrame(rows, schema)
+    return rows
 
 
 def dd_observation_definitions(
-    spark, dds: dict[str, DataDictionary], study: StudyConfig
-) -> DataFrame:
+    dds: dict[str, DataDictionary], study: StudyConfig
+) -> list[dict]:
     """G4: ObservationDefinition per DD variable — permittedDataType from
     the DD type map (wlib_dd_tables_and_vars.wstl:113-127: string→string/
     CodeableConcept, number/int→Quantity, boolean→boolean), units, and
@@ -337,20 +334,10 @@ def dd_observation_definitions(
                     ),
                 }
             )
-    schema = (
-        "module string, resourceType string, "
-        "meta struct<tag:array<struct<system:string,code:string>>,profile:array<string>>, "
-        "identifier_value string, "
-        "code struct<coding:array<struct<code:string,display:string,system:string>>>, "
-        "permittedDataType array<string>, "
-        "quantitativeDetails struct<unit:string>, "
-        "qualifiedInterval struct<range:struct<low:double,high:double>>, "
-        "validCodedValueSet string"
-    )
-    return spark.createDataFrame(rows, schema)
+    return rows
 
 
-def dd_valuesets(spark, dds: dict[str, DataDictionary], study: StudyConfig) -> DataFrame:
+def dd_valuesets(dds: dict[str, DataDictionary], study: StudyConfig) -> list[dict]:
     """G3/G5: ValueSet per enumerated variable (wlib_dd_terms_valueset
     .wstl:12-33) — one compose.include per variable code system. Tagged
     with StudyMeta like the reference (wstl:13)."""
@@ -383,14 +370,7 @@ def dd_valuesets(spark, dds: dict[str, DataDictionary], study: StudyConfig) -> D
                     },
                 }
             )
-    schema = (
-        "module string, resourceType string, "
-        "meta struct<tag:array<struct<system:string,code:string>>,profile:array<string>>, "
-        "url string, name string, status string, "
-        "compose struct<include:array<struct<system:string,"
-        "concept:array<struct<code:string,display:string>>>>>"
-    )
-    return spark.createDataFrame(rows, schema)
+    return rows
 
 
 def harmony_skeleton(dds: dict[str, DataDictionary]) -> list[dict[str, str]]:
@@ -465,9 +445,54 @@ def resources_to_json(df: DataFrame, drop_null_fields: bool = True) -> DataFrame
     )
 
 
+#: Jackson (behind ``to_json``) writes ``\u00XX`` escapes of control
+#: characters with upper-case hex, ``json.dumps`` with lower case; an
+#: escaped backslash is matched first so its ``\\u...`` text is skipped
+_HEX_ESCAPE = re.compile(r"(\\\\)|\\u00([0-9a-f]{2})")
+
+
+def _drop_nulls(value):
+    """Null object fields dropped at every depth, null array elements
+    kept — ``to_json``'s ignoreNullFields behavior."""
+    if isinstance(value, dict):
+        return {k: _drop_nulls(v) for k, v in value.items() if v is not None}
+    if isinstance(value, list):
+        return [_drop_nulls(v) for v in value]
+    return value
+
+
+def resource_body(resource: dict) -> dict:
+    """A driver-built resource as FHIR JSON: ``resourceType`` first,
+    the ``module`` routing key removed, null fields dropped."""
+    rest = {k: v for k, v in resource.items() if k not in ("module", "resourceType")}
+    return {"resourceType": resource["resourceType"], **_drop_nulls(rest)}
+
+
+def resources_frame(spark, resources: list[dict]) -> DataFrame:
+    """Driver-built resources → one ``(module, resourceType,
+    resource_json)`` frame. The JSON is what ``resources_to_json`` writes
+    for the same row (field order, compact separators, raw non-ASCII,
+    Jackson's escapes) except for doubles ≥1e7 or <1e-3: Spark writes
+    ``1.0E7`` where ``json.dumps`` writes ``10000000.0``."""
+    rows = [
+        (
+            r["module"],
+            r["resourceType"],
+            _HEX_ESCAPE.sub(
+                lambda m: m.group(1) or "\\u00" + m.group(2).upper(),
+                json.dumps(resource_body(r), separators=(",", ":"), ensure_ascii=False),
+            ),
+        )
+        for r in resources
+    ]
+    return spark.createDataFrame(
+        rows, "module string, resourceType string, resource_json string"
+    )
+
+
 def dd_activity_definitions(
-    spark, dds: dict[str, DataDictionary], study: StudyConfig
-) -> DataFrame:
+    dds: dict[str, DataDictionary], study: StudyConfig
+) -> list[dict]:
     """G4 (table half): ActivityDefinition per table — the DD
     representation of a table's ObservationDefinition set
     (wlib_dd_tables_and_vars.wstl:83-101: StudyMeta tag, official
@@ -516,16 +541,7 @@ def dd_activity_definitions(
                 "status": "active",
             }
         )
-    schema = (
-        "module string, resourceType string, "
-        "meta struct<tag:array<struct<system:string,code:string>>,profile:array<string>>, "
-        "identifier array<struct<value:string,system:string,use:string>>, "
-        "name string, title string, url string, "
-        "topic array<struct<coding:array<struct<code:string,display:string,system:string>>>>, "
-        "observationResultRequirement array<struct<identifier:struct<value:string,system:string>>>, "
-        "status string"
-    )
-    return spark.createDataFrame(rows, schema)
+    return rows
 
 
 def questionnaire_url(study: StudyConfig, table_name: str) -> str:
@@ -536,9 +552,7 @@ def questionnaire_url(study: StudyConfig, table_name: str) -> str:
     )
 
 
-def questionnaires(
-    spark, dds: dict[str, DataDictionary], study: StudyConfig
-) -> DataFrame:
+def questionnaires(dds: dict[str, DataDictionary], study: StudyConfig) -> list[dict]:
     """G2 (table half): one Questionnaire per table — DD-driven item[]
     (questionnaires.wstl:64-96: StudyMeta tag, official identifier,
     canonical URL, LOINC 74468-0 form code, choice items with
@@ -598,19 +612,21 @@ def questionnaires(
                 "item": items,
             }
         )
-    schema = (
-        "module string, resourceType string, "
-        "meta struct<tag:array<struct<system:string,code:string>>,profile:array<string>>, "
-        "identifier array<struct<value:string,system:string,use:string>>, "
-        "url string, name string, title string, status string, "
-        "subjectType array<string>, "
-        "code array<struct<code:string,display:string,system:string>>, "
-        "item array<struct<linkId:string,text:string,type:string,answerValueSet:string>>"
-    )
-    return spark.createDataFrame(rows, schema)
+    return rows
 
 
-def harmony_valuesets(spark, concept_map, study: StudyConfig) -> DataFrame:
+def _harmony_rows(concept_map) -> list[dict]:
+    """Every mapping row — the harmony resources list them all, however
+    large the map — through ObjectifyHarmony's gate (conceptmap.py:53):
+    only rows with a table name feed the harmony resources, unless none
+    carry one (config-literal maps)."""
+    rows = concept_map._collected()
+    if any(r["table_name"] for r in rows):
+        rows = [r for r in rows if r["table_name"]]
+    return rows
+
+
+def harmony_valuesets(concept_map, study: StudyConfig) -> list[dict]:
     """G5 (valueset half): the two harmony ValueSets — "sources" (local
     codes grouped per (local system, table, parent variable) with
     constructed CodeSystem urls) and "targets" (target codes grouped per
@@ -620,23 +636,11 @@ def harmony_valuesets(spark, concept_map, study: StudyConfig) -> DataFrame:
     row in file order, duplicating a local code that maps to several
     targets."""
     prefix = study.dd_prefix or study.identifier_prefix
-    rows = concept_map._collected() or []
     meta = _study_meta_dict(study)
-
-    def g(r, k):  # Row or prefilled dict; optional columns default ""
-        try:
-            return r[k] or ""
-        except (KeyError, ValueError):
-            return ""
-
-    # ObjectifyHarmony's gate (conceptmap.py:53): only rows with a table
-    # name feed the harmony vocabularies — unless none carry one
-    if any(g(r, "table_name") for r in rows):
-        rows = [r for r in rows if g(r, "table_name")]
     src_groups: dict[tuple, dict] = {}
     tgt_groups: dict[str, dict] = {}
-    for r in rows:
-        skey = (r["local_system"], g(r, "table_name"), g(r, "parent_varname"))
+    for r in _harmony_rows(concept_map):
+        skey = (r["local_system"], r["table_name"], r["parent_varname"])
         grp = src_groups.setdefault(
             skey,
             {
@@ -687,20 +691,10 @@ def harmony_valuesets(spark, concept_map, study: StudyConfig) -> DataFrame:
             "publisher": "INCLUDE FHIR Working Group",
         }
 
-    out = [vs_row("sources", src_groups), vs_row("targets", tgt_groups)]
-    schema = (
-        "module string, resourceType string, "
-        "meta struct<tag:array<struct<system:string,code:string>>,profile:array<string>>, "
-        "identifier array<struct<value:string,system:string,use:string>>, "
-        "name string, title string, url string, "
-        "compose struct<include:array<struct<system:string,"
-        "concept:array<struct<code:string,display:string>>>>>, "
-        "status string, publisher string"
-    )
-    return spark.createDataFrame(out, schema)
+    return [vs_row("sources", src_groups), vs_row("targets", tgt_groups)]
 
 
-def harmony_conceptmap(spark, concept_map, study: StudyConfig) -> DataFrame:
+def harmony_conceptmap(concept_map, study: StudyConfig) -> list[dict]:
     """G5 (ConceptMap half): the single FHIR ConceptMap resource
     (wlib_dd_conceptmap.wstl:67-88 over wstlr/conceptmap.py:35-219):
     official identifier '<study>.concept-map', fixed ncpi-fhir-ig url,
@@ -714,21 +708,10 @@ def harmony_conceptmap(spark, concept_map, study: StudyConfig) -> DataFrame:
     used with an empty table segment. Deviation (documented): groups/
     elements/targets are code-sorted; the reference keeps file order."""
     prefix = study.dd_prefix or study.identifier_prefix
-    rows = concept_map._collected() or []
-
-    def g(r, k):
-        try:
-            return r[k] or ""
-        except (KeyError, ValueError):
-            return ""
-
-    any_table = any(g(r, "table_name") for r in rows)
-    if any_table:
-        rows = [r for r in rows if g(r, "table_name")]
     groups: dict[tuple, dict] = {}
-    for r in rows:
+    for r in _harmony_rows(concept_map):
         lcs = r["local_system"]
-        src_url = dd_system_url(prefix, "CodeSystem", None, g(r, "table_name"), lcs)
+        src_url = dd_system_url(prefix, "CodeSystem", None, r["table_name"], lcs)
         key = (src_url, r["system"])
         grp = groups.setdefault(key, {})
         el = grp.setdefault(r["local_code"], {"display": r["text"], "targets": {}})
@@ -740,7 +723,7 @@ def harmony_conceptmap(spark, concept_map, study: StudyConfig) -> DataFrame:
             f"{study.study_id}/{role}"
         )
 
-    out = [
+    return [
         {
             "module": "harmony",
             "resourceType": "ConceptMap",
@@ -778,14 +761,3 @@ def harmony_conceptmap(spark, concept_map, study: StudyConfig) -> DataFrame:
             ],
         }
     ]
-    schema = (
-        "module string, resourceType string, "
-        "meta struct<tag:array<struct<system:string,code:string>>,profile:array<string>>, "
-        "identifier struct<value:string,system:string,use:string>, "
-        "status string, purpose string, url string, "
-        "sourceUri string, targetUri string, "
-        "group array<struct<source:string,target:string,"
-        "element:array<struct<code:string,display:string,"
-        "target:array<struct<code:string,display:string,equivalence:string>>>>>>"
-    )
-    return spark.createDataFrame(out, schema)

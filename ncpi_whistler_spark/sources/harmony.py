@@ -77,16 +77,21 @@ def read_code_details(paths: str | list[str]) -> dict[str, str]:
     return details
 
 
+#: ``ConceptMap.mappings`` columns, in order
+_MAPPING_COLS = (*_HARMONY_COLS.values(), "table_name", "parent_varname")
+
+
 class ConceptMap:
     """A harmonization dictionary backed by a small mapping DataFrame.
 
     ``mappings`` columns: local_code, text, local_system, code, display,
-    system — one row per (local → target) edge, already deduped.
+    system, table_name, parent_varname — one row per (local → target)
+    edge, already deduped.
     """
 
-    #: cap for driver-side materialization (`codings_lookup`). Reference
-    #: concept maps are human-authored harmony CSVs — config scale, never
-    #: data scale — so this only guards against misuse.
+    #: cap for compiling the map into a literal (`codings_lookup`).
+    #: Reference concept maps are human-authored harmony CSVs — config
+    #: scale, never data scale — so this only guards against misuse.
     MAX_DRIVER_ROWS = 10_000
 
     def __init__(self, mappings: DataFrame, curies: Mapping[str, str] | None = None):
@@ -99,7 +104,8 @@ class ConceptMap:
             )  # F6, wstlr/conceptmap.py:83-85
         self.mappings = mappings
         # driver-side caches (config-scale maps only)
-        self._rows: list | None | bool = None  # None=unknown, False=too big
+        self._rows: list[dict] | None = None
+        self._over_cap: int | None = None  # a cap the map is known to exceed
         self._lookup_cache: dict[str, dict[str, list[tuple]]] = {}
 
     @classmethod
@@ -119,11 +125,11 @@ class ConceptMap:
         curies: Mapping[str, str] | None = None,
     ) -> "ConceptMap":
         """Build from (local_code, text, local_system, code, display,
-        system) tuples — used for config-literal maps and tests."""
+        system) tuples — used for config-literal maps and tests. The
+        grouping columns table_name/parent_varname are empty."""
+        rows = [(*r, "", "") for r in rows]
         df = spark.createDataFrame(
-            rows,
-            "local_code string, text string, local_system string, "
-            "code string, display string, system string",
+            rows, ", ".join(f"{c} string" for c in _MAPPING_COLS)
         )
         cm = cls(df, curies)
         if not curies:
@@ -132,21 +138,11 @@ class ConceptMap:
             # dedupe as __init__'s dropDuplicates)
             seen: set[tuple] = set()
             deduped = []
-            for lc, text, ls, code, display, system in rows:
-                k = (ls, lc, system, code)
-                if k in seen:
-                    continue
-                seen.add(k)
-                deduped.append(
-                    {
-                        "local_code": lc,
-                        "text": text,
-                        "local_system": ls,
-                        "code": code,
-                        "display": display,
-                        "system": system,
-                    }
-                )
+            for row in rows:
+                lc, _text, ls, code, _display, system = row[:6]
+                if (ls, lc, system, code) not in seen:
+                    seen.add((ls, lc, system, code))
+                    deduped.append(dict(zip(_MAPPING_COLS, row)))
             cm._rows = deduped
         return cm
 
@@ -182,13 +178,23 @@ class ConceptMap:
             .agg(F.array_sort(F.collect_list("coding")).alias("codings"))
         )
 
-    def _collected(self) -> list | None:
-        """Mappings rows collected to the driver, or None when the map
-        exceeds MAX_DRIVER_ROWS (callers then use the DataFrame path)."""
+    def _collected(self, cap: int | None = None) -> list[dict] | None:
+        """Mapping rows on the driver, as dicts of all 8 columns. With a
+        ``cap``: None when the map has more rows than that — only
+        ``cap + 1`` rows are fetched to find out, so a data-scale map is
+        never pulled whole onto the driver."""
         if self._rows is None:
-            got = self.mappings.limit(self.MAX_DRIVER_ROWS + 1).collect()
-            self._rows = False if len(got) > self.MAX_DRIVER_ROWS else got
-        return self._rows if self._rows is not False else None
+            if cap is not None and self._over_cap == cap:
+                return None
+            df = self.mappings if cap is None else self.mappings.limit(cap + 1)
+            got = [r.asDict() for r in df.collect()]
+            if cap is not None and len(got) > cap:
+                self._over_cap = cap
+                return None
+            self._rows = got
+        if cap is not None and len(self._rows) > cap:
+            return None
+        return self._rows
 
     def codings_lookup(self, local_system: str) -> dict[str, list[tuple]] | None:
         """Driver-side twin of ``codings_df`` for one local_system:
@@ -202,7 +208,7 @@ class ConceptMap:
         ``create_map`` expressions — zero joins, zero extra jobs."""
         if local_system in self._lookup_cache:
             return self._lookup_cache[local_system]
-        rows = self._collected()
+        rows = self._collected(self.MAX_DRIVER_ROWS)
         if rows is None:
             return None
         out: dict[str, list[tuple]] = {}
@@ -219,61 +225,6 @@ class ConceptMap:
             codings.sort(key=key)
         self._lookup_cache[local_system] = out
         return out
-
-    def display_map_df(self) -> DataFrame:
-        """(local_system, local_code) → first display, for the extractor's
-        ``<col>_display`` derivation (P2, wstlr/extractor.py:274-282,
-        189-191). 'First' is made deterministic with min(display)."""
-        return self.mappings.groupBy("local_system", "local_code").agg(
-            F.min("display").alias("display")
-        )
-
-    def to_fhir_conceptmap(
-        self, cm_id: str, version: str = "v1", study_id: str | None = None
-    ) -> DataFrame:
-        """Nested FHIR ConceptMap shape (G5, wstlr/conceptmap.py:430-538):
-        group[] by (source-system, target-system), element[] per local code,
-        target[] per coding — two-level collect_list. ``study_id`` adds
-        the StudyMeta tag the reference stamps on the ConceptMap
-        (wlib_dd_conceptmap.wstl:72 + _study_meta.wstl:5-9)."""
-        m = self.mappings
-        elements = (
-            m.groupBy("local_system", "system", "local_code")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("code", "display"))
-                ).alias("target")
-            )
-            .groupBy("local_system", "system")
-            .agg(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(F.col("local_code").alias("code"), "target")
-                    )
-                ).alias("element")
-            )
-        )
-        meta_cols = []
-        if study_id is not None:
-            meta_cols = [
-                F.struct(
-                    F.array(
-                        F.struct(
-                            F.lit("https://ncpi-fhir.github.io/fhir-study-metadata").alias("system"),
-                            F.lit(study_id).alias("code"),
-                        )
-                    ).alias("tag")
-                ).alias("meta")
-            ]
-        return elements.select(
-            F.lit(cm_id).alias("id"),
-            F.lit("ConceptMap").alias("resourceType"),
-            *meta_cols,
-            F.lit(version).alias("version"),
-            F.col("local_system").alias("source"),
-            F.col("system").alias("target"),
-            "element",
-        )
 
 
 #: reference's default terminology url base (wstlr/__init__.py:14)

@@ -139,19 +139,6 @@ def test_display_columns(spark):
     assert rows["P1"]["race_display"] == "White(display)"
     assert rows["P2"]["race_display"] is None
 
-    # scoped variant: per-column local_system
-    from ncpi_whistler_spark.operators.harmonize import add_display_columns_scoped
-
-    cm = ConceptMap.from_rows(
-        spark,
-        [("White", "White", "race", "2106-3", "White", "urn:oid:2.16.840.1.113883.6.238")],
-    )
-    df = spark.createDataFrame([("P1", "White"), ("P2", "Other")], "pid string, race string")
-    out2 = add_display_columns_scoped(df, ["race"], cm)
-    rows2 = {r["pid"]: r for r in out2.collect()}
-    assert rows2["P1"]["race_display"] == "White"
-    assert rows2["P2"]["race_display"] is None
-
 
 def test_curie_prefixing(spark):
     cm = ConceptMap.from_rows(

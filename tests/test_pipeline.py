@@ -159,11 +159,11 @@ def test_questionnaire_and_codesystems(spark, extracted):
     links = {i["linkId"] for i in row["item"]}
     assert "sex" in links and "participant_id" in links
 
-    cs = dd_codesystems(spark, extracted.dds, cfg)
-    urls = [r["url"] for r in cs.collect()]
+    cs = dd_codesystems(extracted.dds, cfg)
+    urls = [r["url"] for r in cs]
     assert any(u.endswith("/participant") for u in urls)
     assert any(u.endswith("/participant/sex") for u in urls)
-    sex_cs = cs.where(F.col("url").endswith("/participant/sex")).collect()[0]
+    sex_cs = next(r for r in cs if r["url"].endswith("/participant/sex"))
     assert {c["code"]: c["display"] for c in sex_cs["concept"]} == {
         "1": "Male",
         "2": "Female",

@@ -39,9 +39,9 @@ DD = DataDictionary.from_rows(
 )
 
 
-def test_observation_definitions(spark):
-    od = dd_observation_definitions(spark, {"visits": DD}, STUDY)
-    rows = {r["identifier_value"]: r for r in od.collect()}
+def test_observation_definitions():
+    od = dd_observation_definitions({"visits": DD}, STUDY)
+    rows = {r["identifier_value"]: r for r in od}
     bmi = rows["S.visits.bmi"]
     assert bmi["permittedDataType"] == ["Quantity"]
     assert bmi["quantitativeDetails"]["unit"] == "kg/m2"
@@ -51,9 +51,9 @@ def test_observation_definitions(spark):
     assert status["validCodedValueSet"] == "ValueSet/visits-status"
 
 
-def test_valuesets(spark):
-    vs = dd_valuesets(spark, {"visits": DD}, STUDY)
-    rows = {r["name"]: r for r in vs.collect()}
+def test_valuesets():
+    vs = dd_valuesets({"visits": DD}, STUDY)
+    rows = {r["name"]: r for r in vs}
     inc = rows["visits_status"]["compose"]["include"][0]
     assert inc["system"].endswith("/visits/status")
     assert {c["code"]: c["display"] for c in inc["concept"]} == {"a": "Active", "d": "Done"}
@@ -163,7 +163,7 @@ def test_extract_official_identifier(spark):
     assert row["b"]["value"] == "v1"  # falls back to use=official
 
 
-def test_dd_activity_definitions(spark):
+def test_dd_activity_definitions():
     """G4 table half: one ActivityDefinition per table with the reference
     shape (StudyMeta tag, -vars name, UMLS Research topic, one
     observationResultRequirement per variable)."""
@@ -171,7 +171,7 @@ def test_dd_activity_definitions(spark):
 
     rows = {
         r["name"]: r
-        for r in dd_activity_definitions(spark, {"visits": DD}, STUDY).collect()
+        for r in dd_activity_definitions({"visits": DD}, STUDY)
     }
     r = rows["S.visits-vars"]
     assert r["resourceType"] == "ActivityDefinition"
@@ -183,13 +183,13 @@ def test_dd_activity_definitions(spark):
     assert got == want
 
 
-def test_questionnaires(spark):
+def test_questionnaires():
     """G2 table half: Questionnaire per table — choice items carry the
     variable ValueSet, numeric/string map to integer/decimal/string, and
     every QuestionnaireResponse's link matches the canonical URL."""
     from ncpi_whistler_spark.plans.resources import questionnaire_url, questionnaires
 
-    q = {r["name"]: r for r in questionnaires(spark, {"visits": DD}, STUDY).collect()}
+    q = {r["name"]: r for r in questionnaires({"visits": DD}, STUDY)}
     r = q["visits"]
     assert r["resourceType"] == "Questionnaire"
     assert r["meta"]["tag"][0]["code"] == "S"
@@ -215,7 +215,7 @@ def test_harmony_valuesets(spark):
             ("2", "Female", "sex", "female", "Female", "http://hl7.org/fhir/administrative-gender"),
         ],
     )
-    rows = {r["name"]: r for r in harmony_valuesets(spark, cm, STUDY).collect()}
+    rows = {r["name"]: r for r in harmony_valuesets(cm, STUDY)}
     src = rows["S.concept-map-vs.sources"]
     assert src["meta"]["tag"][0]["code"] == "S"
     assert src["identifier"][0]["value"] == "S.cm-valueset.sources"
@@ -243,7 +243,7 @@ def test_harmony_conceptmap_resource(spark, tmp_path):
         "x,Skipped,other,y,Y,http://z,,\n"
     )
     cm = ConceptMap.from_csv(spark, str(harmony))
-    rows = harmony_conceptmap(spark, cm, STUDY).collect()
+    rows = harmony_conceptmap(cm, STUDY)
     assert len(rows) == 1
     r = rows[0]
     assert r["identifier"]["value"] == "S.cm" or r["identifier"]["value"] == "S.concept-map"
@@ -261,7 +261,7 @@ def test_harmony_conceptmap_resource(spark, tmp_path):
     assert els["1"]["target"][0]["equivalence"] == "equivalent"
 
 
-def test_profiles_flag(spark):
+def test_profiles_flag():
     """Reference default: ncpi-fhir-ig meta.profile stamped on DD
     variable/table/harmony resources; profiles=False removes them."""
     from dataclasses import replace
@@ -271,15 +271,15 @@ def test_profiles_flag(spark):
         dd_observation_definitions,
     )
 
-    od = dd_observation_definitions(spark, {"visits": DD}, STUDY).collect()[0]
+    od = dd_observation_definitions({"visits": DD}, STUDY)[0]
     assert od["meta"]["profile"] == [
         "https://nih-ncpi.github.io/ncpi-fhir-ig/StructureDefinition/study-data-dictionary-variable"
     ]
-    ad = dd_activity_definitions(spark, {"visits": DD}, STUDY).collect()[0]
+    ad = dd_activity_definitions({"visits": DD}, STUDY)[0]
     assert ad["meta"]["profile"][0].endswith("study-data-dictionary-table")
     off = replace(STUDY, profiles=False)
-    od2 = dd_observation_definitions(spark, {"visits": DD}, off).collect()[0]
-    assert od2["meta"]["profile"] is None
+    od2 = dd_observation_definitions({"visits": DD}, off)[0]
+    assert "profile" not in od2["meta"]
     assert od2["meta"]["tag"][0]["code"] == "S"
 
 
@@ -300,3 +300,74 @@ def test_profiles_flag_source_data_observation(spark):
     off = replace(STUDY, profiles=False)
     obs2 = observations_with_components(df, DD, off, "visits", "subject_id")
     assert "profile" not in obs2.schema["meta"].dataType.fieldNames()
+
+
+def test_harmony_resources_list_maps_past_the_literal_cap(spark, tmp_path, monkeypatch):
+    """The driver cap only decides whether harmonize() compiles a literal
+    map; the ConceptMap and ValueSets always list every mapping."""
+    from ncpi_whistler_spark.plans.resources import harmony_conceptmap, harmony_valuesets
+
+    monkeypatch.setattr(ConceptMap, "MAX_DRIVER_ROWS", 2)
+    harmony = tmp_path / "harmony.csv"
+    harmony.write_text(
+        "local code,text,local code system,code,display,code system\n"
+        "1,Male,sex,male,Male,http://g\n"
+        "2,Female,sex,female,Female,http://g\n"
+        "3,Other,sex,other,Other,http://g\n"
+    )
+    cm = ConceptMap.from_csv(spark, str(harmony))
+    assert cm.codings_lookup("sex") is None  # over the cap: join path
+    [r] = harmony_conceptmap(cm, STUDY)
+    [grp] = r["group"]
+    assert [(e["code"], e["target"][0]["code"]) for e in grp["element"]] == [
+        ("1", "male"), ("2", "female"), ("3", "other"),
+    ]
+    vs = {v["name"]: v for v in harmony_valuesets(cm, STUDY)}
+    [inc] = vs["S.concept-map-vs.sources"]["compose"]["include"]
+    assert [c["code"] for c in inc["concept"]] == ["1", "2", "3"]
+
+
+def test_resources_frame_matches_resources_to_json(spark):
+    """The driver-side serializer writes what to_json writes for the same
+    row: resourceType first, null fields dropped at every depth, null
+    array elements kept, raw non-ASCII, Jackson's control-character
+    escapes. Doubles differ only in form outside [1e-3, 1e7)."""
+    from ncpi_whistler_spark.plans.resources import resources_frame, resources_to_json
+
+    text = 'naïve ☃ \x00\x01\x0b\x1f\t\n "q" \\ \\u001f'
+    row = {
+        "module": "m",
+        "resourceType": "Thing",
+        "meta": {"tag": [{"system": "s", "code": None}], "profile": None},
+        "name": text,
+        "item": [{"linkId": "a", "answer": None}, None, {"linkId": None, "answer": [{"v": text}]}],
+        "codes": ["x", None, "y"],
+        "empty": {"a": None},
+        "absent": None,
+        "range": {"low": 0.5, "high": 123456.75},
+    }
+    schema = (
+        "module string, resourceType string, "
+        "meta struct<tag:array<struct<system:string,code:string>>,profile:array<string>>, "
+        "name string, item array<struct<linkId:string,answer:array<struct<v:string>>>>, "
+        "codes array<string>, empty struct<a:string>, absent string, "
+        "range struct<low:double,high:double>"
+    )
+
+    def both(r, ddl):
+        [want] = resources_to_json(spark.createDataFrame([r], ddl)).collect()
+        [got] = resources_frame(spark, [r]).collect()
+        assert (got["module"], got["resourceType"]) == (want["module"], want["resourceType"])
+        return want["resource_json"], got["resource_json"]
+
+    want, got = both(row, schema)
+    assert got == want
+    assert "\\u001F" in got and "\\\\u001f" in got
+    assert json.loads(got)["item"][1] is None
+
+    # the one known difference, possible only in ObservationDefinition min/max
+    big = {"module": "m", "resourceType": "T", "v": 1e7}
+    assert both(big, "module string, resourceType string, v double") == (
+        '{"resourceType":"T","v":1.0E7}',
+        '{"resourceType":"T","v":10000000.0}',
+    )

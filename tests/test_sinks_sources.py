@@ -130,29 +130,33 @@ def test_dd_csv_roundtrip(spark, tmp_path):
     assert dd2.variables[0].data_type == "string"
 
 
-def test_to_fhir_conceptmap_shape_and_meta(spark):
-    """G5 nested ConceptMap: group[] per (source, target system),
-    element[]/target[] sorted, StudyMeta tag when a study id is given
-    (wlib_dd_conceptmap.wstl:72)."""
+def test_harmony_conceptmap_shape_and_meta(spark):
+    """G5 ConceptMap: one group per (source, target system), elements and
+    targets code-sorted, StudyMeta tag (wlib_dd_conceptmap.wstl:72)."""
+    from ncpi_whistler_spark.plans.config import StudyConfig
+    from ncpi_whistler_spark.plans.resources import harmony_conceptmap
     from ncpi_whistler_spark.sources.harmony import ConceptMap
 
+    gender, v2 = "http://hl7.org/fhir/administrative-gender", "http://terminology.hl7.org/v2"
     cm = ConceptMap.from_rows(
         spark,
         [
-            ("1", "Male", "sex", "male", "Male", "http://hl7.org/fhir/administrative-gender"),
-            ("2", "Female", "sex", "female", "Female", "http://hl7.org/fhir/administrative-gender"),
-            ("1", "Male", "sex", "M", "MaleV2", "http://terminology.hl7.org/v2"),
+            ("2", "Female", "sex", "female", "Female", gender),
+            ("1", "Male", "sex", "male", "Male", gender),
+            ("1", "Male", "sex", "M", "MaleV2", v2),
+            ("1", "Male", "sex", "1-M", "Male (coded)", gender),
         ],
     )
-    rows = cm.to_fhir_conceptmap("cm1", study_id="STUDY1").collect()
-    assert {r["resourceType"] for r in rows} == {"ConceptMap"}
-    assert all(r["meta"]["tag"][0]["code"] == "STUDY1" for r in rows)
-    by_target = {r["target"]: r for r in rows}
-    gender = by_target["http://hl7.org/fhir/administrative-gender"]
-    assert gender["source"] == "sex"
-    els = {e["code"]: [t["code"] for t in e["target"]] for e in gender["element"]}
-    assert els == {"1": ["male"], "2": ["female"]}
-    v2 = by_target["http://terminology.hl7.org/v2"]
-    assert {e["code"] for e in v2["element"]} == {"1"}
-    # without a study id there is no meta column at all
-    assert "meta" not in cm.to_fhir_conceptmap("cm2").columns
+    study = StudyConfig(study_id="STUDY1", identifier_prefix="https://x.org/s")
+    [r] = harmony_conceptmap(cm, study)
+    assert r["resourceType"] == "ConceptMap"
+    assert r["meta"]["tag"] == [
+        {"system": "https://ncpi-fhir.github.io/fhir-study-metadata", "code": "STUDY1"}
+    ]
+    assert [g["target"] for g in r["group"]] == [gender, v2]
+    by_target = {g["target"]: g for g in r["group"]}
+    assert by_target[gender]["source"].endswith("/sex")
+    els = {e["code"]: [t["code"] for t in e["target"]] for e in by_target[gender]["element"]}
+    assert list(els) == ["1", "2"]
+    assert els == {"1": ["1-M", "male"], "2": ["female"]}
+    assert [e["code"] for e in by_target[v2]["element"]] == ["1"]

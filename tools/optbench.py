@@ -69,9 +69,9 @@ def main() -> int:
 
     if args.repeats < 1:
         ap.error("--repeats must be >= 1")
+    # relative to the repo root; an absolute path is kept as given
     plans_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        *args.plans_dir.split("/"),
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), args.plans_dir
     )
     if args.plans:
         os.makedirs(plans_dir, exist_ok=True)
